@@ -10,7 +10,8 @@ Modes:
   python bench.py --cores 8       # pin parallelism (scaling protocol runs)
   python bench.py --scaling       # run at 8 and 32 cores in subprocesses,
                                   # report scaling efficiency (BASELINE.md
-                                  # protocol: efficiency = T(4N)/(4*T(N)))
+                                  # protocol: efficiency = T(4N)/(4*T(N)),
+                                  # ×64 replication; ×16 with --funnel)
 """
 
 from __future__ import annotations
@@ -300,15 +301,21 @@ def run_funnel_bench(
     }
 
 
+# The replication each scaling protocol is recorded at (BASELINE.md): a
+# smaller corpus measures the session and stage floors, not scaling.
+SCALING_REPLICATE = {"kg": 64, "funnel": 16}
+
+
 def run_scaling(
-    sf_dir: str, n_small: int = 8, n_large: int = 32, replicate: int = 8,
-    repeats: int = 2, funnel: bool = False,
+    sf_dir: str, n_small: int = 8, n_large: int = 32, repeats: int = 2,
+    funnel: bool = False,
 ) -> dict:
     """Sandbox stand-in for N vs 4N executors (BASELINE.md protocol):
     identical job, identical (replicated) input, local[N] vs local[4N],
     fresh JVM each. Replication makes the run compute-bound so the
     measurement reflects the shuffle-heavy stages, not session startup;
     min-of-repeats tames the sandbox's large run-to-run variance."""
+    replicate = SCALING_REPLICATE["funnel" if funnel else "kg"]
     results = {}
     for cores in (n_small, n_large):
         best = None
@@ -362,9 +369,15 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.scaling:
+        want = SCALING_REPLICATE["funnel" if args.funnel else "kg"]
+        if args.replicate not in (None, want):
+            ap.error(
+                f"--scaling{' --funnel' if args.funnel else ''} is recorded "
+                f"at --replicate {want}; a ×{args.replicate} run would not be "
+                "comparable with the recorded protocol"
+            )
         print(json.dumps(run_scaling(
-            args.sf_dir, args.n_small, args.n_large, args.replicate or 8,
-            funnel=args.funnel)))
+            args.sf_dir, args.n_small, args.n_large, funnel=args.funnel)))
     elif args.funnel:
         print(json.dumps(run_funnel_bench(
             args.sf_dir, args.cores, args.replicate or 1, args.fast)))

@@ -5,8 +5,10 @@ dedup_helpers.py (constants at :31-36) and unit-tested against the same
 vectors the reference uses. Implementation is new: normalization, shingles
 and Jaccard run as NATIVE Spark column expressions (whole-stage codegen,
 no Python); only the MinHash signature needs Python (blake2b, :97-100) and
-runs as an Arrow-vectorized pandas UDF over DISTINCT names — a tiny input
-relative to the corpus.
+runs as an Arrow-vectorized pandas UDF over every row it is given (one per
+entity row in resolve, one per doc in dedup_docs), hashing each distinct
+shingle of an Arrow batch once. Callers compute it once per batch
+(resolve.lsh_band_frame), never once per reference to the frame.
 
 Scale design: MinHash/LSH exists precisely to avoid the O(n²) pair
 comparison (reference dedup_helpers.py:117-128). Here the LSH buckets
@@ -19,6 +21,7 @@ import math
 import re
 from hashlib import blake2b
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -181,35 +184,56 @@ def entropy_gate_col(normalized_fuzzy: Column) -> Column:
     return length_ok & (entropy >= F.lit(NAME_ENTROPY_THRESHOLD))
 
 
+_SEED_PREFIXES = tuple(f"{seed}:".encode() for seed in range(MINHASH_PERMUTATIONS))
+
+
+def minhash_signatures(shingle_arrays: pd.Series) -> pd.Series:
+    """MinHash of every shingle array of one Arrow batch, bit-identical to
+    ``minhash_signature`` with values wrapped into int64.
+
+    Each DISTINCT shingle of the batch is hashed once into a 32-wide
+    uint64 row (names and prose repeat shingles across rows, so the 32
+    blake2b calls per shingle OCCURRENCE were the kernel's cost); a
+    signature is then the column-wise numpy min over its rows. Null
+    arrays stay null; empty arrays give an empty signature."""
+    memo: dict[str, int] = {}
+    row_idx = []
+    for arr in shingle_arrays:
+        if arr is None:
+            row_idx.append(None)
+            continue
+        row_idx.append([memo.setdefault(sh, len(memo)) for sh in arr])
+    if memo:
+        digests = b"".join(
+            blake2b(p + sh.encode(), digest_size=8).digest()
+            for sh in memo
+            for p in _SEED_PREFIXES
+        )
+        hashes = np.frombuffer(digests, dtype=">u8").astype(np.uint64).reshape(
+            len(memo), MINHASH_PERMUTATIONS
+        )
+    return pd.Series(
+        [
+            None if idx is None
+            else [] if not idx
+            else hashes[idx].min(axis=0).view(np.int64).tolist()
+            for idx in row_idx
+        ],
+        index=shingle_arrays.index,
+        dtype=object,
+    )
+
+
 @F.pandas_udf(ArrayType(LongType()))
 def minhash_signature_udf(shingle_arrays: pd.Series) -> pd.Series:
-    """Arrow-vectorized MinHash over shingle arrays.
+    """Arrow-vectorized MinHash over shingle arrays (``minhash_signatures``).
 
     Values are reference-parity 64-bit unsigned ints stored in int64 via
     two's-complement wrap (stable, comparable, groupable); empty shingle
     sets yield an empty signature (no LSH bands → never blocked, matching
     reference behaviour where empty signatures produce no bands).
     """
-
-    def sig(arr) -> list[int] | None:
-        if arr is None:
-            return None
-        s = list(arr)
-        if not s:
-            return []
-        out = []
-        for seed in range(MINHASH_PERMUTATIONS):
-            prefix = f"{seed}:".encode()
-            m = min(
-                int.from_bytes(
-                    blake2b(prefix + sh.encode(), digest_size=8).digest(), "big"
-                )
-                for sh in s
-            )
-            out.append(m - (1 << 64) if m >= (1 << 63) else m)
-        return out
-
-    return shingle_arrays.map(sig)
+    return minhash_signatures(shingle_arrays)
 
 
 def lsh_band_keys_col(signature: Column) -> Column:

@@ -30,11 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from graphiti_spark.functions.dedup_text import (
-    jaccard_col,
-    lsh_band_keys_col,
-    minhash_signature_udf,
-)
+from graphiti_spark.functions.dedup_text import jaccard_col
 
 MAX_BUCKET = 2000  # pathological-bucket guard (same role as resolve.py)
 
@@ -86,6 +82,28 @@ def shingles_of(text_col, mode: str):
     raise ValueError(f"unknown shingle mode {mode!r}")
 
 
+def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, mode: str) -> DataFrame:
+    return docs.select(
+        F.col(id_col).alias("id"), shingles_of(F.col(text_col), mode).alias("shingles")
+    )
+
+
+def _verified_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(a_id, b_id) candidates → (a_id, b_id, jaccard ≥ threshold), the
+    shingles joined from ``sh`` (id, shingles) onto the candidates only."""
+
+    def side(p):
+        return sh.select(F.col("id").alias(f"{p}_id"), F.col("shingles").alias(f"{p}_sh"))
+
+    return (
+        cand.join(side("a"), "a_id")
+        .join(side("b"), "b_id")
+        .withColumn("jaccard", F.round(jaccard_col(F.col("a_sh"), F.col("b_sh")), 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select("a_id", "b_id", "jaccard")
+    )
+
+
 def minhash_near_dup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -102,45 +120,14 @@ def minhash_near_dup(
     ``dropped_sink``: optional list; if given, a (band_idx, band_key,
     bucket_n) metrics frame of capped (recall-losing) buckets is
     appended — never drop silently."""
-    from graphiti_spark.operators.resolve import capped_buckets
+    from graphiti_spark.operators.resolve import lsh_band_frame, lsh_candidate_pairs
 
-    prepared = docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-
-    banded = prepared.select(
-        "id", "shingles", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
-        "id",
-        "shingles",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
-    capped, dropped = capped_buckets(
-        banded, max_bucket, keys=["band_idx", "band_key"]
-    )
-    if dropped_sink is not None:
-        dropped_sink.append(dropped)
-    left = capped.select(
-        "band_idx", "band_key",
-        F.col("id").alias("a_id"), F.col("shingles").alias("a_sh"),
-    )
-    right = capped.select(
-        "band_idx", "band_key",
-        F.col("id").alias("b_id"), F.col("shingles").alias("b_sh"),
-    )
-    pairs = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "a_sh", "b_id", "b_sh")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jaccard_col(F.col("a_sh"), F.col("b_sh")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
+    sh = _doc_shingles(docs, id_col, text_col, mode)
+    cand = lsh_candidate_pairs(
+        lsh_band_frame(sh, ["id"]), "id", ["band_idx", "band_key"], max_bucket,
+        dropped_sink,
+    ).select(F.col("a").alias("a_id"), F.col("b").alias("b_id"))
+    return _verified_pairs(cand, sh, threshold)
 
 
 def build_minhash_index(
@@ -156,17 +143,9 @@ def build_minhash_index(
     its own buckets instead of scanning the corpus. Prior TEXT is not
     in the index — the incremental verifier re-reads it only for the
     candidate ids the band join surfaces."""
-    prepared = docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-    return prepared.select(
-        "id", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
-        "id",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
+    from graphiti_spark.operators.resolve import lsh_bands
+
+    return lsh_bands(_doc_shingles(docs, id_col, text_col, mode), ["id"])
 
 
 def minhash_near_dup_incremental(
@@ -197,19 +176,11 @@ def minhash_near_dup_incremental(
     verification candidates (a semi-join bounded by candidate count);
     bucket caps count the COMBINED bucket (new + prior rows per band
     key) and are surfaced via ``dropped_sink``, never silent."""
+    from graphiti_spark.operators.resolve import capped_buckets, lsh_band_frame
+
     keys = ["band_idx", "band_key"]
-    new_prepared = new_docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-    new_banded = new_prepared.select(
-        "id", "shingles", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
-        "id",
-        "shingles",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
+    new_sh = _doc_shingles(new_docs, id_col, text_col, mode)
+    new_banded = lsh_band_frame(new_sh, ["id"])
     # prune the prior index to the batch's band keys FIRST: the only
     # prior-sized read, and it's key-pruned (bucket/partition pruning
     # when the index table is laid out by band)
@@ -220,21 +191,12 @@ def minhash_near_dup_incremental(
 
     # combined bucket cap: the pair join below fans out with the TOTAL
     # bucket population, so the cap must count both sides
-    from graphiti_spark.operators.resolve import capped_buckets
-
-    all_banded = (
-        new_banded.select("id", *keys)
-        .unionByName(prior_hits)
+    kept, dropped = capped_buckets(
+        new_banded.unionByName(prior_hits), max_bucket, keys=keys
     )
-    _, dropped = capped_buckets(all_banded, max_bucket, keys=keys)
     if dropped_sink is not None:
         dropped_sink.append(dropped)
-    kept_keys = (
-        all_banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .select(*keys)
-    )
+    kept_keys = kept.select(*keys).distinct()
     new_k = new_banded.join(kept_keys, keys, "left_semi")
     prior_k = prior_hits.join(kept_keys, keys, "left_semi")
 
@@ -260,33 +222,11 @@ def minhash_near_dup_incremental(
     cand_ids = cand.select(F.col("a_id").alias("id")).unionByName(
         cand.select(F.col("b_id").alias("id"))
     ).distinct()
-    prior_sh = (
-        prior_docs.join(
-            cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-        )
-        .select(
-            F.col(id_col).alias("id"),
-            shingles_of(F.col(text_col), mode).alias("shingles"),
-        )
+    prior_sh = _doc_shingles(
+        prior_docs.join(cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"),
+        id_col, text_col, mode,
     )
-    sh = new_prepared.select("id", "shingles").unionByName(prior_sh)
-    pairs = (
-        cand.join(
-            sh.select(F.col("id").alias("a_id"), F.col("shingles").alias("a_sh")),
-            "a_id",
-        )
-        .join(
-            sh.select(F.col("id").alias("b_id"), F.col("shingles").alias("b_sh")),
-            "b_id",
-        )
-    )
-    return (
-        pairs.withColumn(
-            "jaccard", F.round(jaccard_col(F.col("a_sh"), F.col("b_sh")), 4)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
+    return _verified_pairs(cand, new_sh.unionByName(prior_sh), threshold)
 
 
 # ------------------------------------------------------------------ simhash

@@ -151,15 +151,18 @@ def _channel(
                 )
             else:
                 reach = bfs_edges(edges, origin_uuids)
-            hits = reach.select(
-                F.col("uuid").alias("id"), F.lit(0.0).alias("score")
+            # limit first, then rank the ≤ overfetch survivors: the
+            # single-partition window never sees the reachable set
+            hits = (
+                reach.select(F.col("uuid").alias("id"), F.lit(0.0).alias("score"))
+                .orderBy("id")
+                .limit(overfetch)
             )
             from pyspark.sql import Window
 
             w = Window.orderBy(F.col("id"))
             ranked.append(
                 hits.select("id", "score", F.row_number().over(w).alias("rank"))
-                .limit(overfetch)
             )
     if not ranked:
         raise ValueError(f"no usable methods in {cfg.methods}")

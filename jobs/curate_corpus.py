@@ -38,6 +38,29 @@ import sys
 import time
 
 
+def semantic_dedup_stage(docs, embeddings, dropped_sink=None, **kw):
+    """SemDeDup over the docs that have an embedding row (``embeddings``:
+    vec_id keyed like doc_id, plus embedding; ``kw`` goes to
+    ``dedup_docs.semantic_dedup``). A doc without an embedding row has
+    no semantic signal, so it passes through instead of vanishing in
+    the join. Returns (surviving docs, the unembedded docs' doc_ids)."""
+    from pyspark.sql import functions as F
+
+    from graphiti_spark.operators.dedup_docs import semantic_dedup
+
+    embs = embeddings.select("vec_id", "embedding").join(
+        docs.select(F.col("doc_id").alias("vec_id")), "vec_id"
+    )
+    sem = semantic_dedup(embs, dropped_sink=dropped_sink, **kw)
+    dups = sem.filter(F.col("id") != F.col("canonical_id")).select(
+        F.col("id").alias("doc_id")
+    )
+    unembedded = docs.select("doc_id").join(
+        embs.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
+    )
+    return docs.join(dups, "doc_id", "left_anti"), unembedded
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="dir containing documents.parquet")
@@ -190,32 +213,20 @@ def main() -> None:
     # embeddings keyed like doc_id: IVF cells bound the quadratic, the
     # per-cell cap bounds centroid skew, and capped cells are surfaced
     # in stats exactly like dropped LSH buckets — recall loss at scale
-    # is observable, never silent.
+    # is observable, never silent. Docs with no embedding row pass
+    # through and are counted as unembedded_docs.
     if args.semantic_dedup_embeddings:
-        from graphiti_spark.operators.dedup_docs import semantic_dedup
-
-        embs = (
-            spark.read.parquet(args.semantic_dedup_embeddings)
-            .select("vec_id", "embedding")
-            .join(
-                docs.select(F.col("doc_id").alias("vec_id")), "vec_id"
-            )
-        )
         cell_sink: list = []
-        sem = semantic_dedup(
-            embs,
+        docs, unembedded = semantic_dedup_stage(
+            docs,
+            spark.read.parquet(args.semantic_dedup_embeddings),
             n_cells=args.semantic_n_cells,
             threshold=args.semantic_threshold,
             max_cell=args.semantic_max_cell or None,
             dropped_sink=cell_sink,
         )
-        docs = docs.join(
-            sem.filter(F.col("id") == F.col("canonical_id")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-        )
         if not args.no_funnel:
+            stats["unembedded_docs"] = unembedded.count()
             dropped = cell_sink[0].persist() if cell_sink else None
             stats["dropped_ivf_cells"] = dropped.count() if dropped is not None else 0
             stats["dropped_ivf_rows"] = (

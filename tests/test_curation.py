@@ -369,3 +369,31 @@ def test_semantic_decontaminate_empty_benchmark_returns_clean_rows(spark):
         map(tuple, semantic_decontaminate(corpus, bench).collect())
     )
     assert out == [(1, 0.0, 0, False, True), (2, 0.0, 0, False, True)]
+
+
+def test_curate_semantic_stage_keeps_docs_without_embeddings(spark):
+    """The curate job's SemDeDup stage drops only the non-canonical
+    members of a semantic-duplicate group; a doc with no embedding row
+    survives and is reported as unembedded."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "jobs", "curate_corpus.py")
+    spec = importlib.util.spec_from_file_location("curate_corpus", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    docs = _docs(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "no vector")])
+    embs = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.999, 0.01, 0.0, 0.0]),  # near-duplicate of 1
+            (3, [0.0, 1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    kept, unembedded = job.semantic_dedup_stage(
+        docs, embs, n_cells=1, threshold=0.99
+    )
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 3, 4]
+    assert [r.doc_id for r in unembedded.collect()] == [4]

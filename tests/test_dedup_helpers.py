@@ -5,6 +5,8 @@ functions — values below are golden literals, not imports)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from graphiti_spark.functions import dedup_text as dt
 
@@ -121,3 +123,42 @@ def test_spark_jaccard_matches_python(spark):
         assert r.j == pytest.approx(
             dt.jaccard_similarity(dt.shingles(r.a), dt.shingles(r.b)), abs=1e-9
         )
+
+
+# ---- the per-batch memoized MinHash kernel ----
+
+_SHINGLE = st.text(alphabet=st.sampled_from("abz' 0é中ß"), min_size=1, max_size=4)
+
+
+def _wrapped(shingle_set):
+    return [v - (1 << 64) if v >= (1 << 63) else v
+            for v in dt.minhash_signature(shingle_set)]
+
+
+@settings(max_examples=60, derandomize=True, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.lists(_SHINGLE, max_size=6)), max_size=8))
+def test_memoized_minhash_matches_reference(batch):
+    """One Arrow batch through the memoized kernel equals the per-set
+    reference signature: empty sets give empty signatures, null arrays
+    stay null, repeated and non-ASCII shingles (shared across rows, so
+    the memo is hit) hash as in the reference."""
+    import pandas as pd
+
+    out = dt.minhash_signatures(pd.Series(batch, dtype=object))
+    assert len(out) == len(batch)
+    for arr, sig in zip(batch, out):
+        if arr is None:
+            assert sig is None
+        else:
+            assert list(sig) == _wrapped(set(arr))
+
+
+def test_memoized_minhash_udf_matches_reference(spark):
+    """The same kernel inside Spark, fed by Arrow."""
+    from pyspark.sql import functions as F
+
+    rows = [(None,), ([],), (["abc"],), (["ab", "ab", "é中x"],), (["abc", "ßz"],)]
+    df = spark.createDataFrame(rows, "sh array<string>")
+    got = [r.sig for r in df.select(dt.minhash_signature_udf(F.col("sh")).alias("sig")).collect()]
+    want = [None if sh is None else _wrapped(set(sh)) for (sh,) in rows]
+    assert [None if g is None else list(g) for g in got] == want

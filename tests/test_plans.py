@@ -509,3 +509,142 @@ def test_mean_pool_no_python_combinable_agg(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "HashAggregate" in plan
     assert "Window" not in plan
+
+
+# Operators whose output is bounded by a constant whatever their input.
+_ROW_BOUNDED = {
+    "TakeOrderedAndProject", "GlobalLimit", "LocalLimit", "CollectLimit",
+    "LocalTableScan",
+}
+
+
+def _children(node):
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _bounded(node) -> bool:
+    """Whether ``node`` (a physical plan node) emits a bounded row count:
+    a limit sits on every input path, a join counting as bounded when the
+    side whose rows it keeps is."""
+    if node.nodeName() in _ROW_BOUNDED:
+        return True
+    kids = _children(node)
+    if not kids:
+        return False
+    if "Join" in node.nodeName():
+        kind = node.joinType().toString()
+        if kind.startswith("Left"):
+            return _bounded(kids[0])
+        if kind == "RightOuter":
+            return _bounded(kids[1])
+        if kind.startswith("Inner"):
+            return any(_bounded(k) for k in kids)
+    return all(_bounded(k) for k in kids)
+
+
+def _unbounded_global_windows(df) -> list[str]:
+    """Unpartitioned Window nodes over an unbounded input: each one
+    sorts its whole input in one task."""
+    bad, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        kids = _children(node)
+        if (node.nodeName() == "Window" and node.partitionSpec().isEmpty()
+                and not all(_bounded(k) for k in kids)):
+            bad.append(node.simpleString(200))
+        stack.extend(kids)
+    return bad
+
+
+def test_hybrid_recipes_rank_bounded_inputs_only(spark):
+    """Every ranking window of every canned search recipe is either
+    partitioned or over a limited input: an unpartitioned window over a
+    retrieval arm's full hit set (the BFS arm's reachable set) would
+    rank it on one partition."""
+    from graphiti_spark.functions.embed import embed_text
+    from graphiti_spark.search import hybrid as H
+
+    facts = ["fast table join", "slow window scan", "key dup value"]
+    edges = spark.createDataFrame(
+        [(f"e{i}", "g", f"s{i % 2}", f"s{(i + 1) % 3}", "R", f, embed_text(f))
+         for i, f in enumerate(facts)],
+        "uuid string, group_id string, source_node_uuid string, "
+        "target_node_uuid string, name string, fact string, "
+        "fact_embedding array<float>",
+    )
+    nodes = spark.createDataFrame(
+        [(f"s{i}", f"node {i}", "g", f"summary {i}", embed_text(f"node {i}"))
+         for i in range(3)],
+        "uuid string, name string, group_id string, summary string, "
+        "name_embedding array<float>",
+    )
+    episodes = spark.createDataFrame(
+        [(f"ep{i}", "g", f) for i, f in enumerate(facts)],
+        "uuid string, group_id string, content string",
+    )
+    communities = spark.createDataFrame(
+        [("c1", "community node 0", "g", "fast table", embed_text("c"))],
+        "uuid string, name string, group_id string, summary string, "
+        "name_embedding array<float>",
+    )
+    mention_edges = spark.createDataFrame(
+        [("m1", "g", "ep0", "s0")],
+        "uuid string, group_id string, episode_uuid string, entity_uuid string",
+    )
+    # the BFS arm runs its traversal while the plan is built, so it is
+    # planned once per channel kind rather than in every recipe carrying it
+    configs = {n: getattr(H, n) for n in dir(H)
+               if n.isupper() and isinstance(getattr(H, n), H.SearchConfig)}
+    bfs = {
+        "bfs_edges": H.SearchConfig(edges=H.ChannelConfig(["bfs"], "rrf")),
+        "bfs_nodes": H.SearchConfig(nodes=H.ChannelConfig(["bfs"], "rrf")),
+    }
+    for name, config in {**configs, **bfs}.items():
+        out = H.search(
+            "fast table", config, nodes=nodes, edges=edges, episodes=episodes,
+            communities=communities, mention_edges=mention_edges,
+            center_uuid="s0", origin_uuids=["s0"] if name in bfs else None,
+        )
+        for channel, df in out.items():
+            assert _unbounded_global_windows(df) == [], (name, channel)
+
+
+def _names(spark, prefix):
+    return spark.range(60).select(
+        F.concat(F.lit(prefix), F.col("id").cast("string")).alias("uuid"),
+        F.lit("g").alias("group_id"),
+        F.concat(F.lit("acme entity name "), (F.col("id") % 20).cast("string")).alias(
+            "name"
+        ),
+    )
+
+
+def test_minhash_runs_once_per_batch(spark):
+    """Blocking reads the band frame several times (bucket sizes, cap
+    join, both self-join sides) and Catalyst may push an inferred filter
+    below the UDF's Project; either re-runs the MinHash UDF. The band
+    frame's own plan evaluates it exactly once, and nothing downstream
+    of its checkpoint evaluates it again."""
+    from graphiti_spark.operators.dedup_docs import _doc_shingles, minhash_near_dup
+    from graphiti_spark.operators.resolve import (
+        _gated_shingles,
+        duplicate_pairs,
+        duplicate_pairs_between,
+        lsh_bands,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    fronts = [
+        lsh_bands(_gated_shingles(_names(spark, "u")), ["uuid", "group_id"]),
+        lsh_bands(_doc_shingles(docs, "doc_id", "text", "word"), ["id"]),
+    ]
+    for bands in fronts:
+        plan = bands._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+    for out in (
+        duplicate_pairs(_names(spark, "u")),
+        duplicate_pairs_between(_names(spark, "n"), _names(spark, "o")),
+        minhash_near_dup(docs),
+    ):
+        assert "minhash_signature_udf" not in _plan(out)

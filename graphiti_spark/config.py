@@ -16,7 +16,7 @@ any change to it is a breaking change to the correctness contract.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 # --- entity-resolution constants (reference dedup_helpers.py:31-36) ---
@@ -119,10 +119,6 @@ class RunConfig:
 
     run_ts: datetime = DEFAULT_RUN_TS
     run_id: str = "run-0"
-    embedding_dim: int = EMBEDDING_DIM
-    n_salt: int = N_SALT
-    fuzzy_jaccard_threshold: float = FUZZY_JACCARD_THRESHOLD
-    embed_cosine_threshold: float = EMBED_COSINE_THRESHOLD
     # E3: entity types whose mentions (and touching facts) are excluded
     # from the graph (reference excluded_entity_types). Empty = keep all.
     excluded_entity_types: tuple = ()
@@ -144,7 +140,6 @@ class RunConfig:
     # batch runs cache only the small, heavily-reused dedup subtree and
     # let Catalyst fuse the big row streams into deep jobs).
     persist_stages: bool | frozenset = True
-    extra: dict = field(default_factory=dict)
 
 
 # The small, reused subtree worth caching in single-output batch runs:

@@ -21,8 +21,10 @@ a partitioned table write:
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 GRAPH_TABLES = (
     "nodes",
@@ -169,16 +171,39 @@ def apply_graph_delta(
 ) -> dict:
     """Merge-on-read one delta version onto ``base`` (lazy plans; nothing
     materializes until a query runs): delete keyed rows, append upserts."""
-    from pyspark.sql import functions as F  # noqa: F401
+    return _merge_deltas(spark, base, [path], table_keys)
 
+
+def load_graph_versions(
+    spark: SparkSession,
+    dirs: list[str],
+    tables: tuple[str, ...] = GRAPH_TABLES,
+    keys: dict[str, list[str]] | None = None,
+) -> dict:
+    """Reconstruct graph state from a FULL snapshot dir followed by zero
+    or more delta dirs (newest last) — the reader half of the versioned
+    delta commit (streaming/ingest.py)."""
+    base = load_graph(spark, dirs[0], tables)
+    return _merge_deltas(spark, base, dirs[1:], keys)
+
+
+def _merge_deltas(
+    spark: SparkSession,
+    base: dict,
+    paths: list[str],
+    table_keys: dict[str, list[str]] | None,
+) -> dict:
+    """Merge delta versions (oldest first) onto ``base`` with ONE join
+    per table however many there are: every row carries the version it
+    was written in, and a row survives unless a LATER version upserts
+    or deletes its key (upsert keys are implicit deletes). Folding one
+    anti-join per version instead nests a shuffle and a join per delta
+    into every read of the table: a 4-page streaming batch against a
+    chain of 7-8 versions ran ~1,100 Spark jobs in 190-390 s, against
+    ~190 jobs in 24 s on a chain of 1 (sf0.001, 4 cores)."""
     table_keys = table_keys if table_keys is not None else DELTA_KEYS
     out = dict(base)
     for table, keys in table_keys.items():
-        target = os.path.join(path, table)
-        up_dir = os.path.join(target, "upserts")
-        if not os.path.isdir(up_dir):
-            continue
-        up = spark.read.parquet(up_dir)
         b = out.get(table)
         if b is None:
             # A base without this table (a pre-delta snapshot) cannot be
@@ -191,31 +216,39 @@ def apply_graph_delta(
             # (ingest_incremental reconstructs uuid_map from pairs and
             # postings from the merged corpus).
             continue
-        dead = up.select(*keys).distinct()
-        del_dir = os.path.join(target, "deletes")
-        if os.path.isdir(del_dir):
-            dead = dead.unionByName(
-                spark.read.parquet(del_dir).select(*keys)
-            ).distinct()
-        out[table] = b.join(dead, keys, "left_anti").unionByName(
-            up.select(*b.columns)
+        rows = [b.withColumn("_v", F.lit(0))]
+        dead = []
+        for v, path in enumerate(paths, 1):
+            target = os.path.join(path, table)
+            up_dir = os.path.join(target, "upserts")
+            if not os.path.isdir(up_dir):
+                continue
+            up = spark.read.parquet(up_dir)
+            rows.append(up.select(*b.columns).withColumn("_v", F.lit(v)))
+            dead.append(up.select(*keys).withColumn("_v", F.lit(v)))
+            del_dir = os.path.join(target, "deletes")
+            if os.path.isdir(del_dir):
+                dead.append(
+                    spark.read.parquet(del_dir)
+                    .select(*keys)
+                    .withColumn("_v", F.lit(v))
+                )
+        if not dead:
+            continue
+        last_dead = (
+            reduce(DataFrame.unionByName, dead)
+            .groupBy(*keys)
+            .agg(F.max("_v").alias("_dead_v"))
+        )
+        out[table] = (
+            reduce(DataFrame.unionByName, rows)
+            .join(last_dead, keys, "left")
+            .filter(
+                F.col("_dead_v").isNull() | (F.col("_v") >= F.col("_dead_v"))
+            )
+            .select(*b.columns)
         )
     return out
-
-
-def load_graph_versions(
-    spark: SparkSession,
-    dirs: list[str],
-    tables: tuple[str, ...] = GRAPH_TABLES,
-    keys: dict[str, list[str]] | None = None,
-) -> dict:
-    """Reconstruct graph state from a FULL snapshot dir followed by zero
-    or more delta dirs (newest last) — the reader half of the versioned
-    delta commit (streaming/ingest.py)."""
-    state = load_graph(spark, dirs[0], tables)
-    for d in dirs[1:]:
-        state = apply_graph_delta(spark, state, d, keys)
-    return state
 
 
 def create_table_sql(table: str, schema_ddl: str) -> str:

@@ -43,7 +43,7 @@ DB); the shape mirrors its add_episode incremental contract
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +54,15 @@ from graphiti_spark.operators.dedup_docs import (
     canonical_docs_incremental,
     minhash_near_dup,
     minhash_near_dup_incremental,
+)
+from graphiti_spark.streaming.ingest import (
+    DOCS_FEED_SCHEMA,
+    StateFamily,
+    as_state_docs,
+    commit_takedown,
+    load_state,
+    make_batch_fn,
+    run_stream,
 )
 
 DEDUP_TABLES = ("docs", "index", "pairs", "canon")
@@ -66,15 +75,9 @@ DEDUP_DELTA_KEYS: dict[str, list[str]] = {
     "canon": ["id"],
 }
 DEDUP_PARTITION_COLS = {"index": "band_idx"}
-
-# feed shape = the documents table from BASELINE input_hint
-DOCS_FEED_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
+DEDUP_STATE = StateFamily(
+    DEDUP_TABLES, DEDUP_DELTA_KEYS, DEDUP_PARTITION_COLS, DOCS_FEED_SCHEMA
 )
-
-
-def _as_state_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
 
 
 def init_dedup_state(
@@ -87,7 +90,7 @@ def init_dedup_state(
 ) -> dict[str, DataFrame]:
     """Full rebuild: the first batch (and the equality oracle's right-
     hand side). Returns the {docs, index, canon} table map."""
-    state_docs = _as_state_docs(docs, id_col, text_col)
+    state_docs = as_state_docs(docs, id_col, text_col)
     pairs = minhash_near_dup(
         state_docs, id_col="id", threshold=threshold, mode=mode,
         dropped_sink=dropped_sink,
@@ -122,7 +125,7 @@ def update_dedup_state(
     lazy merge-on-read plan referenced several times here, and composing
     it un-truncated grows the plan multiplicatively per batch (same
     lineage trap as operators/incremental.py)."""
-    batch = _as_state_docs(new_docs, id_col, text_col)
+    batch = as_state_docs(new_docs, id_col, text_col)
     inc_pairs = minhash_near_dup_incremental(
         batch,
         prior["index"],
@@ -258,40 +261,26 @@ def remove_docs(
 def commit_remove_docs(
     spark: SparkSession, state_dir: str, doomed_ids: DataFrame
 ) -> None:
-    """Apply a takedown to the COMMITTED state: load the latest version,
-    repair, and commit a delta version (same write-new-then-flip commit;
-    the pointer keeps the stream's replay-guard identity so an in-flight
-    feed continues unharmed)."""
-    from graphiti_spark.streaming.ingest import (
-        _commit_graph_version,
-        _latest_pointer,
-    )
-
-    prior = load_dedup_state(spark, state_dir)
-    if prior is None:
-        return
-    out = remove_docs(doomed_ids, prior)
-    ptr = _latest_pointer(state_dir) or {}
-    _commit_graph_version(
-        out,
-        state_dir,
-        ptr.get("batch_id", 0),
-        ptr.get("stream_id"),
-        DEDUP_TABLES,
-        DEDUP_DELTA_KEYS,
-        DEDUP_PARTITION_COLS,
+    """remove_docs committed as the next version of the state."""
+    commit_takedown(
+        spark, state_dir, DEDUP_STATE, lambda p: remove_docs(doomed_ids, p)
     )
 
 
 # ---------------------------------------------------------------- streaming
+# one path with the graph stream (streaming/ingest.py): the first batch
+# full-builds, every later batch updates the committed state
 
 
-def load_dedup_state(spark: SparkSession, state_dir: str):
-    """Latest committed dedup state (None before the first batch):
-    merge-on-read over the last full snapshot + its delta chain."""
-    from graphiti_spark.streaming.ingest import load_graph_state
+load_dedup_state = partial(load_state, family=DEDUP_STATE)
 
-    return load_graph_state(spark, state_dir, DEDUP_TABLES, DEDUP_DELTA_KEYS)
+
+def _build(threshold: float, mode: str):
+    return lambda batch, prior: (
+        init_dedup_state(batch, threshold=threshold, mode=mode)
+        if prior is None
+        else update_dedup_state(batch, prior, threshold=threshold, mode=mode)
+    )
 
 
 def make_dedup_batch_fn(
@@ -301,45 +290,11 @@ def make_dedup_batch_fn(
     threshold: float = 0.95,
     mode: str = "word",
 ):
-    """foreachBatch callback: first batch full-builds the state, every
-    later batch runs the incremental update, then commits a delta
-    version. Same exactly-once contract as the graph ingest: the
-    stream_id-scoped replay guard skips a crash-replayed committed batch
-    (streaming/ingest.py:167-182)."""
-    from graphiti_spark.streaming.ingest import (
-        _commit_graph_version,
-        _latest_pointer,
+    """foreachBatch callback; its stream_id-scoped replay guard and
+    commit are streaming/ingest.make_batch_fn's."""
+    return make_batch_fn(
+        state_dir, DEDUP_STATE, stream_id, _build(threshold, mode)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ptr = _latest_pointer(state_dir)
-        if (
-            ptr is not None
-            and ptr.get("stream_id") == stream_id
-            and ptr.get("batch_id", -1) >= batch_id
-        ):
-            return
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        prior = load_dedup_state(spark, state_dir)
-        if prior is None:
-            out = init_dedup_state(batch_df, threshold=threshold, mode=mode)
-        else:
-            out = update_dedup_state(
-                batch_df, prior, threshold=threshold, mode=mode
-            )
-        _commit_graph_version(
-            out,
-            state_dir,
-            batch_id,
-            stream_id,
-            DEDUP_TABLES,
-            DEDUP_DELTA_KEYS,
-            DEDUP_PARTITION_COLS,
-        )
-
-    return process_batch
 
 
 def run_streaming_dedup(
@@ -351,31 +306,9 @@ def run_streaming_dedup(
     mode: str = "word",
     available_now: bool = True,
 ):
-    """Start (and with available_now=True, drain) the streaming corpus
-    dedup: a documents feed becomes a continuously-maintained
-    {docs, index, canon} state — the corpus-side twin of
-    run_streaming_ingest."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(DOCS_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", "16")
-        .parquet(feed_dir)
+    """A documents feed becomes a continuously-maintained {docs, index,
+    pairs, canon} state — the corpus-side twin of run_streaming_ingest."""
+    return run_stream(
+        spark, feed_dir, state_dir, checkpoint_dir, DEDUP_STATE,
+        _build(threshold, mode), available_now,
     )
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_dedup_batch_fn(
-                state_dir,
-                stream_id=checkpoint_dir,
-                threshold=threshold,
-                mode=mode,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query

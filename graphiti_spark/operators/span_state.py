@@ -39,7 +39,7 @@ gram+island closure as ``docs_dup_spans``.
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,15 @@ from graphiti_spark.operators.dedup_docs import (
     dup_spans,
     dup_spans_incremental,
 )
+from graphiti_spark.streaming.ingest import (
+    DOCS_FEED_SCHEMA,
+    StateFamily,
+    as_state_docs,
+    commit_takedown,
+    load_state,
+    make_batch_fn,
+    run_stream,
+)
 
 SPAN_TABLES = ("docs", "grams", "spans")
 SPAN_DELTA_KEYS: dict[str, list[str]] = {
@@ -58,16 +67,11 @@ SPAN_DELTA_KEYS: dict[str, list[str]] = {
     "spans": ["id"],
 }
 SPAN_PARTITION_COLS = {"grams": "gram_shard"}
+SPAN_STATE = StateFamily(
+    SPAN_TABLES, SPAN_DELTA_KEYS, SPAN_PARTITION_COLS, DOCS_FEED_SCHEMA
+)
 N_GRAM_SHARDS = 64
 SPAN_K = 8
-
-DOCS_FEED_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def _as_state_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
 
 
 def _flatten_occ(occ: DataFrame) -> DataFrame:
@@ -97,7 +101,7 @@ def init_span_state(
 ) -> dict[str, DataFrame]:
     """Full rebuild: the first batch (and the equality oracle's right-
     hand side). Returns the {docs, grams, spans} table map."""
-    state_docs = _as_state_docs(docs, id_col, text_col)
+    state_docs = as_state_docs(docs, id_col, text_col)
     occ = _gram_occ(state_docs, k, "id", "text")
     return {
         "docs": state_docs,
@@ -127,7 +131,7 @@ def update_span_state(
     docs' span sets; nothing needs an explicit delete. Batch-sized
     frames are localCheckpointed (the composed-plan lineage trap,
     operators/incremental.py)."""
-    batch = _as_state_docs(new_docs, id_col, text_col).localCheckpoint()
+    batch = as_state_docs(new_docs, id_col, text_col).localCheckpoint()
     spans_upserts = dup_spans_incremental(
         batch, _as_index(prior["grams"]), k, id_col="id", text_col="text"
     ).localCheckpoint()
@@ -239,77 +243,32 @@ def remove_doc_spans(
 def commit_remove_doc_spans(
     spark: SparkSession, state_dir: str, doomed_ids: DataFrame
 ) -> None:
-    """Apply a takedown to the COMMITTED span state (delta version,
-    write-new-then-flip; the pointer keeps the stream's replay-guard
-    identity)."""
-    from graphiti_spark.streaming.ingest import (
-        _commit_graph_version,
-        _latest_pointer,
-    )
-
-    prior = load_span_state(spark, state_dir)
-    if prior is None:
-        return
-    out = remove_doc_spans(doomed_ids, prior)
-    ptr = _latest_pointer(state_dir) or {}
-    _commit_graph_version(
-        out,
-        state_dir,
-        ptr.get("batch_id", 0),
-        ptr.get("stream_id"),
-        SPAN_TABLES,
-        SPAN_DELTA_KEYS,
-        SPAN_PARTITION_COLS,
+    """remove_doc_spans committed as the next version of the state."""
+    commit_takedown(
+        spark, state_dir, SPAN_STATE, lambda p: remove_doc_spans(doomed_ids, p)
     )
 
 
 # ---------------------------------------------------------------- streaming
+# one path with the graph stream (streaming/ingest.py): the first batch
+# full-builds, every later batch updates the committed state
 
 
-def load_span_state(spark: SparkSession, state_dir: str):
-    """Latest committed span state (None before the first batch):
-    merge-on-read over the last full snapshot + its delta chain."""
-    from graphiti_spark.streaming.ingest import load_graph_state
+load_span_state = partial(load_state, family=SPAN_STATE)
 
-    return load_graph_state(spark, state_dir, SPAN_TABLES, SPAN_DELTA_KEYS)
+
+def _build(k: int):
+    return lambda batch, prior: (
+        init_span_state(batch, k=k)
+        if prior is None
+        else update_span_state(batch, prior, k=k)
+    )
 
 
 def make_span_batch_fn(state_dir: str, *, stream_id: str, k: int = SPAN_K):
-    """foreachBatch callback: first batch full-builds, later batches run
-    the incremental update, each committing a delta version. Same
-    stream_id-scoped replay guard as the graph ingest."""
-    from graphiti_spark.streaming.ingest import (
-        _commit_graph_version,
-        _latest_pointer,
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ptr = _latest_pointer(state_dir)
-        if (
-            ptr is not None
-            and ptr.get("stream_id") == stream_id
-            and ptr.get("batch_id", -1) >= batch_id
-        ):
-            return
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        prior = load_span_state(spark, state_dir)
-        if prior is None:
-            out = init_span_state(batch_df, k=k)
-        else:
-            out = update_span_state(batch_df, prior, k=k)
-        _commit_graph_version(
-            out,
-            state_dir,
-            batch_id,
-            stream_id,
-            SPAN_TABLES,
-            SPAN_DELTA_KEYS,
-            SPAN_PARTITION_COLS,
-        )
-
-    return process_batch
+    """foreachBatch callback; its stream_id-scoped replay guard and
+    commit are streaming/ingest.make_batch_fn's."""
+    return make_batch_fn(state_dir, SPAN_STATE, stream_id, _build(k))
 
 
 def run_streaming_spans(
@@ -320,25 +279,9 @@ def run_streaming_spans(
     k: int = SPAN_K,
     available_now: bool = True,
 ):
-    """Start (and with available_now=True, drain) the streaming span
-    dedup: a documents feed becomes a continuously-maintained
-    {docs, grams, spans} state."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(DOCS_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", "16")
-        .parquet(feed_dir)
+    """A documents feed becomes a continuously-maintained {docs, grams,
+    spans} state."""
+    return run_stream(
+        spark, feed_dir, state_dir, checkpoint_dir, SPAN_STATE, _build(k),
+        available_now,
     )
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_span_batch_fn(state_dir, stream_id=checkpoint_dir, k=k)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query

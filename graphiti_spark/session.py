@@ -13,6 +13,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+def _default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: 40 % of physical
+    RAM, capped at 16 g. The JVM needs room above -Xmx (metaspace,
+    threads, direct buffers) and the Python UDF workers live beside it;
+    a fixed 16 g heap on a 16 GB host got the JVM killed by the kernel."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb * 2 // 5)}m"
+
 
 def get_spark(
     app_name: str = "graphiti-spark",
@@ -29,6 +37,7 @@ def get_spark(
     while cluster runs can size it to cores × a small factor.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     if master is None:
         master = f"local[{cpus}]"
 
@@ -64,7 +73,7 @@ def get_spark(
         # a driver-OOM vector that has nothing to do with data. Cap the
         # rendered length; execution is unaffected.
         .config("spark.sql.maxPlanStringLength", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     # Pre-back the whole heap at JVM start (provisioning, not throughput):
@@ -76,7 +85,6 @@ def get_spark(
     # (-Xms=-Xmx + AlwaysPreTouch on executors); opt-in because tests
     # prefer fast session spin-up over peak steady-state throughput.
     if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1":
-        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
         builder = builder.config(
             "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
         )

@@ -246,3 +246,52 @@ def test_streaming_restart_is_exactly_once(spark, tmp_path):
     v2 = sorted(os.listdir(state))
     assert v2 == v1                      # no new version committed
     assert load_graph_state(spark, state)["nodes"].count() == n1
+
+
+@pytest.mark.parametrize("family", ["dedup", "spans"])
+def test_takedown_keeps_stream_replay_identity(spark, tmp_path, family):
+    """A committed takedown is a new version but not a new batch: the
+    pointer keeps the stream's batch_id and stream_id, so a redelivered
+    committed batch stays a no-op and the stream's next batch commits."""
+    import json
+
+    from graphiti_spark.operators import dedup_state, span_state
+
+    make_fn, takedown, load = {
+        "dedup": (
+            dedup_state.make_dedup_batch_fn,
+            dedup_state.commit_remove_docs,
+            dedup_state.load_dedup_state,
+        ),
+        "spans": (
+            span_state.make_span_batch_fn,
+            span_state.commit_remove_doc_spans,
+            span_state.load_span_state,
+        ),
+    }[family]
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    batch0 = docs.filter(F.col("doc_id") < 20)
+    batch1 = docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 40))
+
+    def ptr():
+        with open(os.path.join(state, "_LATEST")) as fh:
+            return json.load(fh)
+
+    fn = make_fn(state, stream_id="feed")
+    fn(batch0, 0)
+    takedown(spark, state, spark.createDataFrame([(0,), (5,)], "id long"))
+    p = ptr()
+    assert (p["seq"], p["batch_id"], p["stream_id"]) == (1, 0, "feed")
+
+    fn(batch0, 0)  # redelivered after the takedown: still a replay
+    assert ptr()["seq"] == 1
+    assert not {0, 5} & {r.id for r in load(spark, state)["docs"].collect()}
+
+    fn(batch1, 1)
+    p = ptr()
+    assert (p["seq"], p["batch_id"]) == (2, 1)
+    assert {r.id for r in load(spark, state)["docs"].collect()} == set(
+        range(1, 40)
+    ) - {5}
